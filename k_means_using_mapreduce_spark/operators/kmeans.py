@@ -52,7 +52,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
-from ..sources.loaders import k_row_df as _k_row_df
+from ..sources.loaders import k_row_df as _k_row_df, validate_kmeans_input
 from pyspark.sql import functions as F
 
 #: O23 — the reference logs init/iteration/convergence state to dump.txt
@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 #: through standard logging (driver side; Spark's event log covers tasks).
 logger = logging.getLogger("k_means_using_mapreduce_spark.kmeans")
 
-from ..functions.vectors import argmin_centroid, sq_dist_expr
+from ..functions.vectors import argmin_centroid
 
 Centroids = Sequence[tuple[int, Sequence[float]]]
 
@@ -139,7 +139,7 @@ def sse(
 ) -> DataFrame:
     """Total within-cluster SSE as a 1-row DataFrame (column ``sse``).
     With ``weight_col`` the per-row squared distance is weighted, matching
-    the fused engine's weighted accumulation (ADVICE r2)."""
+    ``kmeans_fit``'s weighted accumulation (ADVICE r2)."""
     a = assign(df, centroids, features_col, keep_dist=True)
     term = (
         F.col("sq_dist") * F.col(weight_col)
@@ -156,24 +156,6 @@ class KMeansResult:
     converged: bool
     sse: float
     cluster_sizes: dict[int, int]
-
-
-def _update_fast(assigned: DataFrame, features_col: str) -> DataFrame:
-    """Fit-loop update via MLlib Summarizer (single-pass JVM vector mean)
-    — avoids the 64× posexplode row amplification of :func:`update`.
-    Requires ``_fvec`` (VectorUDT) and ``_w`` (double weight) columns;
-    the mean is the ``_w``-weighted mean and ``n`` the total weight."""
-    from pyspark.ml.functions import vector_to_array
-    from pyspark.ml.stat import Summarizer
-
-    return (
-        assigned.groupBy("cid")
-        .agg(
-            F.sum("_w").alias("n"),
-            Summarizer.mean(F.col("_fvec"), F.col("_w")).alias("_mean_vec"),
-        )
-        .select("cid", "n", vector_to_array("_mean_vec").alias("centroid"))
-    )
 
 
 def init_centroids(
@@ -249,35 +231,44 @@ def init_centroids_pp(
     return [(i + 1, vec) for i, vec in enumerate(chosen)]
 
 
-def _min_d2_to(feats: DataFrame, cand) -> DataFrame:
-    """(f, d2): each row's squared distance to its nearest candidate —
-    numpy GEMM against the broadcast candidate matrix in one narrow
-    ``mapInPandas`` pass (the literal-expression fold used by
-    ``init_centroids_pp`` grows with the candidate count; a matrix
-    product does not)."""
+def _sq_dists_to(C):
+    """The GEMM distance kernel of every executor-side K-Means pass:
+    ``sq_dists(vectors) -> (keep, X, d2)`` bound to the K×D matrix ``C``.
+    Rows that are null or not D long are dropped (the ragged-row policy:
+    a dense GEMM cannot hold them); ``keep`` masks the survivors, ``X``
+    stacks them and ``d2`` is their n×K squared-distance matrix. Nested
+    so cloudpickle ships it by value (workers never import this package)."""
     import numpy as np
 
-    C = np.asarray(cand, dtype=np.float64)
+    C = np.asarray(C, dtype=np.float64)
+    D = C.shape[1]
+    cn = (C * C).sum(axis=1)
+
+    def sq_dists(vectors):
+        keep = np.array([v is not None and len(v) == D for v in vectors], dtype=bool)
+        X = np.asarray([v for v, k in zip(vectors, keep) if k], dtype=np.float64)
+        X = X.reshape(-1, D)
+        return keep, X, (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + cn[None, :]
+
+    return sq_dists
+
+
+def _min_d2_to(feats: DataFrame, cand) -> DataFrame:
+    """(f, d2): each row's squared distance to its nearest candidate —
+    :func:`_sq_dists_to` against the broadcast candidate matrix in one
+    narrow ``mapInPandas`` pass (the literal-expression fold used by
+    ``init_centroids_pp`` grows with the candidate count; a matrix
+    product does not)."""
+    sq_dists = _sq_dists_to(cand)
 
     def gen(batches):
         import numpy as np
         import pandas as pd
 
-        cn = (C * C).sum(axis=1)
-        D = C.shape[1]
         for pdf in batches:
-            if not len(pdf):
-                continue
-            # same ragged-row policy as the fused Lloyd kernel: rows
-            # whose feature length differs from the seed dimension are
-            # dropped (a dense GEMM cannot hold them); kmeans_fit
-            # re-applies the same filter before fitting
-            rows = [f for f in pdf["f"] if f is not None and len(f) == D]
-            if not rows:
-                continue
-            X = np.asarray(rows, dtype=np.float64)
-            d = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + cn[None, :]
-            yield pd.DataFrame({"f": list(X), "d2": np.maximum(d.min(axis=1), 0.0)})
+            _, X, d = sq_dists(pdf["f"])
+            if len(X):
+                yield pd.DataFrame({"f": list(X), "d2": np.maximum(d.min(axis=1), 0.0)})
 
     return feats.mapInPandas(gen, "f array<double>, d2 double")
 
@@ -344,30 +335,22 @@ def init_centroids_pp_scalable(
     # weight candidates by how many input rows each one is nearest to
     # (argmin GEMM pass → per-partition bincount partials → driver sum)
     C = np.asarray(cand, dtype=np.float64)
+    sq_dists = _sq_dists_to(C)
+    K = len(C)
 
     def count_gen(batches):
         import numpy as np
         import pandas as pd
 
-        cn = (C * C).sum(axis=1)
-        D = C.shape[1]
-        counts = np.zeros(len(C), dtype=np.int64)
+        counts = np.zeros(K, dtype=np.int64)
         seen = False
         for pdf in batches:
-            if not len(pdf):
-                continue
-            # ragged-row policy: see _min_d2_to
-            rows = [f for f in pdf["f"] if f is not None and len(f) == D]
-            if not rows:
-                continue
-            seen = True
-            X = np.asarray(rows, dtype=np.float64)
-            d = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + cn[None, :]
-            counts += np.bincount(d.argmin(axis=1), minlength=len(C))
+            _, X, d = sq_dists(pdf["f"])
+            if len(X):
+                seen = True
+                counts += np.bincount(d.argmin(axis=1), minlength=K)
         if seen:
-            yield pd.DataFrame({"idx": np.arange(len(C)), "n": counts})
-
-    import pandas as pd  # noqa: F401 (executor-side import mirrored here)
+            yield pd.DataFrame({"idx": np.arange(K), "n": counts})
 
     partials = feats.mapInPandas(count_gen, "idx long, n long").groupBy("idx").agg(
         F.sum("n").alias("n")
@@ -401,11 +384,15 @@ def init_centroids_pp_scalable(
     return [(i + 1, [float(v) for v in C[j]]) for i, j in enumerate(chosen)]
 
 
-def _lloyd_iter_partials(work: DataFrame, centroids: Centroids) -> list:
-    """One fused Lloyd iteration: a single narrow ``mapInPandas`` pass
-    computes per-partition (cid, total weight, weighted coordinate sum,
-    weighted SSE) partials with numpy GEMM distances; only K×partitions
-    tiny rows are collected — zero shuffle per iteration, the same
+def _lloyd_totals(work: DataFrame, centroids: Centroids) -> dict:
+    """One Lloyd iteration over ``work`` (columns ``features``, ``_w``):
+    ``{cid: (total weight, weighted coordinate sum, weighted SSE)}`` for
+    every non-empty cluster.
+
+    A single narrow ``mapInPandas`` pass assigns rows with
+    :func:`_sq_dists_to` (ragged rows are dropped there) and emits
+    per-partition partials; only K×partitions tiny rows are collected
+    and summed on the driver — zero shuffle per iteration, the same
     partial-aggregate design MLlib's KMeans uses internally.
 
     Tie-break matches the reference's strict ``<`` scan
@@ -415,57 +402,92 @@ def _lloyd_iter_partials(work: DataFrame, centroids: Centroids) -> list:
     import numpy as np
 
     ordered = sorted(centroids, key=lambda t: t[0])
-    cids = [int(c) for c, _ in ordered]
+    cids = np.asarray([int(c) for c, _ in ordered])
     C = np.asarray([vec for _, vec in ordered], dtype=np.float64)
+    sq_dists = _sq_dists_to(C)
 
     def gen(batches):
         import numpy as np
         import pandas as pd
 
         K, D = C.shape
-        cn = (C * C).sum(axis=1)
         wsum = np.zeros(K)
         vsum = np.zeros((K, D))
         esum = np.zeros(K)
         seen = False
         for pdf in batches:
-            if not len(pdf):
-                continue
-            lens = pdf["features"].map(len)
-            pdf = pdf[lens == D]
-            if not len(pdf):
+            keep, X, d = sq_dists(pdf["features"])
+            if not len(X):
                 continue
             seen = True
-            X = np.asarray(list(pdf["features"]), dtype=np.float64)
-            w = pdf["_w"].to_numpy(dtype=np.float64)
-            d = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + cn[None, :]
-            idx = np.argmin(d, axis=1)
-            Xw = X * w[:, None]
-            for kk in range(K):
-                mask = idx == kk
-                if mask.any():
-                    wsum[kk] += w[mask].sum()
-                    vsum[kk] += Xw[mask].sum(axis=0)
-                    # exact fold, not the expanded form: GEMM's x²-2xc+c²
-                    # loses precision near zero
-                    diff = X[mask] - C[kk]
-                    esum[kk] += ((diff * diff).sum(axis=1) * w[mask]).sum()
+            w = pdf["_w"].to_numpy(dtype=np.float64)[keep]
+            idx = d.argmin(axis=1)
+            onehot = np.zeros((K, len(X)))
+            onehot[idx, np.arange(len(X))] = w
+            wsum += onehot.sum(axis=1)
+            vsum += onehot @ X
+            # exact fold, not the expanded form: GEMM's x²-2xc+c² loses
+            # precision near zero
+            diff = X - C[idx]
+            esum += np.bincount(idx, weights=(diff * diff).sum(axis=1) * w, minlength=K)
         if seen:
             nz = wsum > 0
             yield pd.DataFrame(
-                {
-                    "cid": np.asarray(cids)[nz],
-                    "w": wsum[nz],
-                    "s": list(vsum[nz]),
-                    "e": esum[nz],
-                }
+                {"cid": cids[nz], "w": wsum[nz], "s": list(vsum[nz]), "e": esum[nz]}
             )
 
-    return (
+    totals: dict = {}
+    for r in (
         work.select("features", "_w")
         .mapInPandas(gen, "cid int, w double, s array<double>, e double")
         .collect()
+    ):
+        w0, s0, e0 = totals.get(r["cid"], (0.0, 0.0, 0.0))
+        totals[r["cid"]] = (w0 + r["w"], s0 + np.asarray(r["s"]), e0 + r["e"])
+    return totals
+
+
+def _sorted_initial_centroids(
+    work: DataFrame, initial_centroids: Centroids
+) -> list[tuple[int, list[float]]]:
+    """User-supplied centroids as floats sorted by id; raises ValueError
+    when any differs in dimension from the data (its first row)."""
+    centroids = sorted(
+        ((int(c), [float(v) for v in vec]) for c, vec in initial_centroids),
+        key=lambda t: t[0],
     )
+    dim = len(work.select("features").first()["features"])
+    bad_dims = {cid: len(vec) for cid, vec in centroids if len(vec) != dim}
+    if bad_dims:
+        raise ValueError(
+            f"centroid dimension mismatch: data is {dim}-D but "
+            f"initial centroids {bad_dims} differ"
+        )
+    return centroids
+
+
+def _fit_input(
+    df: DataFrame, features_col: str, weight_col: str | None = None
+) -> DataFrame:
+    """The ``(features, _w)`` rows a fit runs on. Null policy (the
+    reference has no null semantics — np.loadtxt just crashes on
+    malformed rows, SURVEY.md §1): rows with a missing vector, any null
+    coordinate, or a null or non-positive weight are dropped."""
+    w = F.lit(1.0) if weight_col is None else F.col(weight_col).cast("double")
+    return df.select(F.col(features_col).alias("features"), w.alias("_w")).filter(
+        F.col("features").isNotNull()
+        & F.forall("features", lambda x: x.isNotNull())
+        & F.col("_w").isNotNull()
+        & (F.col("_w") > 0)
+    )
+
+
+def _final_result(
+    work: DataFrame, centroids, iterations: int, converged: bool, sizes
+) -> KMeansResult:
+    """One more Lloyd pass for the SSE w.r.t. the *final* centroids."""
+    final_sse = sum(e for _, _, e in _lloyd_totals(work, centroids).values())
+    return KMeansResult(centroids, iterations, converged, float(final_sse), sizes)
 
 
 def kmeans_fit(
@@ -479,7 +501,6 @@ def kmeans_fit(
     initial_centroids: Centroids | None = None,
     weight_col: str | None = None,
     init: str = "random",
-    engine: str = "fused",
     on_iteration=None,
 ) -> KMeansResult:
     """Lloyd's algorithm driver loop (O19) with seeded init (O4),
@@ -488,48 +509,18 @@ def kmeans_fit(
     mirroring the reference's ``np.allclose(old, new, atol=1e-4)``
     (master.py:144-147) after sorting by id.
 
+    Each iteration is one :func:`_lloyd_totals` pass (one job, one
+    collect), which also drops rows of the wrong dimension.
+
     ``weight_col`` enables weighted K-Means: centroids become
     weighted means and cluster sizes report total weight (rounded).
     The natural use at 100 TB: fit on pre-aggregated or coreset rows
     where weight = collapsed-row count, instead of raw data."""
-    from pyspark.ml.functions import array_to_vector
-
-    # Null policy (the reference has no null semantics — np.loadtxt just
-    # crashes on malformed rows, SURVEY.md §1): rows with a missing
-    # vector or any null coordinate are dropped before fitting.
-    cols = [F.col(features_col).alias("features")]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("double").alias("_w"))
-    work = df.select(*cols).filter(
-        F.col("features").isNotNull()
-        & F.forall("features", lambda x: x.isNotNull())
-    )
-    if engine != "fused":
-        work = work.withColumn("_fvec", array_to_vector(F.col("features")))
-    if weight_col is None:
-        work = work.withColumn("_w", F.lit(1.0))
-    else:
-        work = work.filter(F.col("_w").isNotNull() & (F.col("_w") > 0))
-    work = work.cache()
+    work = _fit_input(df, features_col, weight_col).cache()
     try:
-        n = work.count()  # materialize cache; O3 guard
-        if n == 0:
-            raise ValueError("Data not found or empty")
-        if k > n:
-            raise ValueError(f"Number of centroids ({k}) exceeds number of data points ({n})")
-
+        n = validate_kmeans_input(work, k)  # also materializes the cache
         if initial_centroids is not None:
-            centroids = sorted(
-                ((int(c), [float(v) for v in vec]) for c, vec in initial_centroids),
-                key=lambda t: t[0],
-            )
-            dim = len(work.select("features").first()["features"])
-            bad_dims = {cid: len(vec) for cid, vec in centroids if len(vec) != dim}
-            if bad_dims:
-                raise ValueError(
-                    f"centroid dimension mismatch: data is {dim}-D but "
-                    f"initial centroids {bad_dims} differ"
-                )
+            centroids = _sorted_initial_centroids(work, initial_centroids)
         elif init == "random":
             centroids = init_centroids(work, k, seed)
         elif init in ("k-means++", "kmeans++"):
@@ -547,43 +538,19 @@ def kmeans_fit(
             n, k, seed, max_iter, tol,
             [(c, [round(v, 4) for v in vec[:4]]) for c, vec in centroids[:4]],
         )
-        # Ragged-row policy, applied identically to BOTH engines (ADVICE
-        # r2): rows whose feature length differs from the centroid
-        # dimension are dropped before fitting — previously the fused
-        # kernel dropped them silently while the exact path counted them.
-        dim = len(centroids[0][1])
-        fit_df = work.filter(F.size("features") == dim)
         converged = False
         iterations = 0
         sizes: dict[int, int] = {}
         for _ in range(max_iter):
             iterations += 1
-            if engine == "fused":
-                partials: dict[int, tuple[float, list[float]]] = {}
-                for r in _lloyd_iter_partials(fit_df, centroids):
-                    w0, s0 = partials.get(r["cid"], (0.0, None))
-                    s1 = list(r["s"]) if s0 is None else [
-                        a + b for a, b in zip(s0, r["s"])
-                    ]
-                    partials[r["cid"]] = (w0 + r["w"], s1)
-                new_by_id = {
-                    cid: ([v / w for v in s], int(round(w)))
-                    for cid, (w, s) in partials.items()
-                }
-            else:
-                assigned = assign(fit_df, centroids, "features", keep_dist=False)
-                rows = _update_fast(assigned, "features").collect()  # K rows
-                new_by_id = {
-                    r["cid"]: (list(r["centroid"]), int(round(r["n"])))
-                    for r in rows
-                }
+            totals = _lloyd_totals(work, centroids)
             new_centroids = []
             sizes = {}
             for cid, old_vec in centroids:
-                if cid in new_by_id:
-                    vec, cnt = new_by_id[cid]
-                    new_centroids.append((cid, vec))
-                    sizes[cid] = cnt
+                if cid in totals:
+                    w, s, _ = totals[cid]
+                    new_centroids.append((cid, (s / w).tolist()))
+                    sizes[cid] = int(round(w))
                 else:  # empty cluster: keep previous centroid
                     new_centroids.append((cid, list(old_vec)))
                     sizes[cid] = 0
@@ -605,20 +572,7 @@ def kmeans_fit(
                 logger.info("converged after %d iterations (tol=%g)", iterations, tol)
                 break
 
-        if engine == "fused":
-            # one more fused pass: SSE w.r.t. the *final* centroids
-            final_sse = sum(r["e"] for r in _lloyd_iter_partials(fit_df, centroids))
-        else:
-            # _w-weighted, matching the fused kernel's accumulation, so
-            # both engines report the same sse for the same fit
-            final_sse = sse(fit_df, centroids, "features", weight_col="_w").first()["sse"] or 0.0
-        return KMeansResult(
-            centroids=centroids,
-            iterations=iterations,
-            converged=converged,
-            sse=float(final_sse),
-            cluster_sizes=sizes,
-        )
+        return _final_result(work, centroids, iterations, converged, sizes)
     finally:
         work.unpersist()
 
@@ -640,8 +594,9 @@ def kmeans_fit_minibatch(
     blended with the running per-cluster counts.
 
     At 100 TB a full Lloyd pass per iteration is the dominant cost;
-    mini-batches cut per-iteration work by ``batch_fraction`` while
-    converging to near-identical SSE for well-separated data.
+    mini-batches cut per-iteration work by ``batch_fraction`` (in
+    ``(0, 1]``) while converging to near-identical SSE for
+    well-separated data.
 
     Batch membership is md5-hash-bucketed (`pmod(md5-int, buckets)`
     rotating with the iteration number) — retry-stable and
@@ -649,15 +604,13 @@ def kmeans_fit_minibatch(
     re-draws rand() and silently changes the batch).
 
     Runs on the fused zero-shuffle iteration kernel
-    (:func:`_lloyd_iter_partials`); per-cluster running counts give
+    (:func:`_lloyd_totals`); per-cluster running counts give
     each centroid a learning rate 1/c_t that damps oscillation.
     """
     from .dedup import md5_int60
 
-    work = df.select(F.col(features_col).alias("features")).filter(
-        F.col("features").isNotNull()
-        & F.forall("features", lambda x: x.isNotNull())
-    ).withColumn("_w", F.lit(1.0))
+    if not 0.0 < batch_fraction <= 1.0:
+        raise ValueError(f"batch_fraction must be in (0, 1], got {batch_fraction}")
     buckets = max(1, int(round(1.0 / batch_fraction)))
     # hash of the feature vector text — content-deterministic, no row id
     # needed; the seed offsets the bucket rotation
@@ -666,20 +619,11 @@ def kmeans_fit_minibatch(
         + F.lit(seed),
         F.lit(buckets),
     )
-    work = work.withColumn("_mb_bucket", bucket).cache()
+    work = _fit_input(df, features_col).withColumn("_mb_bucket", bucket).cache()
     try:
-        n = work.count()
-        if n == 0:
-            raise ValueError("Data not found or empty")
-        if k > n:
-            raise ValueError(
-                f"Number of centroids ({k}) exceeds number of data points ({n})"
-            )
+        validate_kmeans_input(work, k)
         if initial_centroids is not None:
-            centroids = sorted(
-                ((int(c), [float(v) for v in vec]) for c, vec in initial_centroids),
-                key=lambda t: t[0],
-            )
+            centroids = _sorted_initial_centroids(work, initial_centroids)
         else:
             centroids = init_centroids(work, k, seed)
 
@@ -689,14 +633,8 @@ def kmeans_fit_minibatch(
         for it in range(max_iter):
             iterations += 1
             batch = work.filter(F.col("_mb_bucket") == (it % buckets))
-            partials: dict[int, tuple[float, list[float]]] = {}
-            for r in _lloyd_iter_partials(batch, centroids):
-                w0, s0 = partials.get(r["cid"], (0.0, None))
-                s1 = list(r["s"]) if s0 is None else [
-                    a + b for a, b in zip(s0, r["s"])
-                ]
-                partials[r["cid"]] = (w0 + r["w"], s1)
-            if not partials:
+            totals = _lloyd_totals(batch, centroids)
+            if not totals:
                 # Empty batch bucket (content-hash bucketing collapses
                 # duplicate vectors; small/skewed data can leave buckets
                 # empty): a no-op iteration says nothing about
@@ -705,13 +643,13 @@ def kmeans_fit_minibatch(
             new_centroids = []
             movement = 0.0
             for cid, old_vec in centroids:
-                if cid in partials and partials[cid][0] > 0:
-                    w, ssum = partials[cid]
-                    batch_mean = [v / w for v in ssum]
+                if cid in totals:
+                    w, ssum, _ = totals[cid]
                     counts[cid] += w
                     eta = w / counts[cid]
                     new_vec = [
-                        o + eta * (m - o) for o, m in zip(old_vec, batch_mean)
+                        o + eta * (m - o)
+                        for o, m in zip(old_vec, (ssum / w).tolist())
                     ]
                 else:
                     new_vec = list(old_vec)
@@ -725,17 +663,8 @@ def kmeans_fit_minibatch(
                 converged = True
                 break
 
-        final_sse = sum(r["e"] for r in _lloyd_iter_partials(work, centroids))
-        sizes = {
-            cid: int(round(c)) for cid, c in counts.items()
-        }
-        return KMeansResult(
-            centroids=centroids,
-            iterations=iterations,
-            converged=converged,
-            sse=float(final_sse),
-            cluster_sizes=sizes,
-        )
+        sizes = {cid: int(round(c)) for cid, c in counts.items()}
+        return _final_result(work, centroids, iterations, converged, sizes)
     finally:
         work.unpersist()
 

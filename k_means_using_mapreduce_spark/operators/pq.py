@@ -98,9 +98,7 @@ def train_pq_codebooks(
         books: PQCodebooks = []
         for j in range(m):
             sub = train.select(F.slice("v", j * dsub + 1, dsub).alias("features"))
-            fit = kmeans_fit(
-                sub, n_codes, seed=seed + j, max_iter=max_iter, engine="fused"
-            )
+            fit = kmeans_fit(sub, n_codes, seed=seed + j, max_iter=max_iter)
             # code = position in cid-sorted order (cids are 1..n_codes)
             books.append(
                 [vecs for _, vecs in sorted(fit.centroids, key=lambda t: t[0])]
@@ -137,7 +135,7 @@ def encode_pq(
     argmin over the (batch × n_codes) distance GEMM — the fused-Lloyd
     kernel shape, numpy throughout. Rows with NULL or wrong-dimension
     vectors are dropped (the dense GEMM cannot hold them; same policy
-    as the fused K-Means kernel, kmeans.py::_min_d2_to).
+    as the K-Means distance kernel ``kmeans._sq_dists_to``).
 
     ``passthrough`` columns ride along unchanged (e.g. the coarse
     ``cid`` in the IVF-PQ build — avoids a second pass to rejoin them).

@@ -376,7 +376,7 @@ def recommend_topk_gemm(
     ``U @ Yᵀ`` as a single dgemm and selects the per-row top-k via
     partition + stable sort, so per-user work is vectorized C instead
     of |items| Spark rows through two ranking windows (the
-    ``_min_d2_to`` kernel shape, operators/kmeans.py:250). Tie
+    ``kmeans._sq_dists_to`` GEMM kernel shape). Tie
     handling is exact: candidates at the k-th score boundary are kept
     and resolved by item id, matching the window's ``ORDER BY score
     DESC, item`` total order. Scores are bit-identical to the

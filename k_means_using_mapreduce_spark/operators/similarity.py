@@ -184,6 +184,8 @@ def probe_buckets(centroids: Centroids, query: Sequence[float], nprobe: int) -> 
     """The ``nprobe`` bucket ids nearest the query — K distances to one
     vector, computed driver-side (the probe predicate must be a literal
     so the scan can partition-prune)."""
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     ranked = sorted(
         ((cid, sum((a - b) ** 2 for a, b in zip(vec, query))) for cid, vec in centroids),
         key=lambda t: (t[1], t[0]),
@@ -206,6 +208,8 @@ def ivf_topk_pruned(
     score projection → TakeOrderedAndProject. The cid predicate is
     satisfied entirely by directory pruning — zero row-level filter
     work, and corpus bytes read scale with nprobe/K, not corpus size."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     cents = load_ivf_centroids(spark, path)
     probes = probe_buckets(cents, query, nprobe)
     corpus = spark.read.parquet(f"{path}/corpus").where(F.col("cid").isin(probes))

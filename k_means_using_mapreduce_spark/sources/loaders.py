@@ -203,11 +203,14 @@ def with_row_index(df: DataFrame, col: str = "row_idx") -> DataFrame:
 
 
 def validate_kmeans_input(df: DataFrame, k: int) -> int:
-    """O3: raise ValueError on empty input or K > N (master.py:29-33).
+    """O3: raise ValueError on K < 1, empty input or K > N
+    (master.py:29-33).
 
     Returns N. Uses a single count() action — the reference does a full
     driver-side load just to learn N.
     """
+    if k < 1:
+        raise ValueError(f"k must be positive, got {k}")
     n = df.count()
     if n == 0:
         raise ValueError("Data not found or empty")

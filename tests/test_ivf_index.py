@@ -231,3 +231,21 @@ def test_refined_search_validation(spark, ivf, ivf_q):
         S.ivf_topk_refined(
             spark, ivf_q["path"], ivf["emb"], ivf["query"], refine_factor=0
         )
+
+
+def test_probe_buckets_rejects_nprobe_below_one():
+    """nprobe=-1 used to probe K-1 buckets via the [:-1] slice and
+    nprobe=0 none at all."""
+    cents = [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0])]
+    assert S.probe_buckets(cents, [0.9, 0.1], 1) == [2]
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="nprobe"):
+            S.probe_buckets(cents, [0.9, 0.1], bad)
+
+
+def test_pruned_search_rejects_nprobe_or_k_below_one(spark, ivf):
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="nprobe"):
+            S.ivf_topk_pruned(spark, ivf["path"], ivf["query"], k=10, nprobe=bad)
+        with pytest.raises(ValueError, match="k must be"):
+            S.ivf_topk_pruned(spark, ivf["path"], ivf["query"], k=bad, nprobe=2)

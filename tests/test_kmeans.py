@@ -253,6 +253,88 @@ def test_minibatch_empty_bucket_not_converged(spark):
     assert abs(by_id[1][0] - by_id[2][0]) > 5.0
 
 
+# Two blobs, a point planted exactly midway between initial centroids
+# 1 and 2 (an exact tie in both the expression and the GEMM distance
+# form), and a far centroid 3 that never wins a point.
+TIE_ROWS = [
+    ([-1.0, 0.0],), ([0.0, 1.0],), ([0.0, -1.0],), ([2.0, 0.0],),
+    ([4.0, 1.0],), ([5.0, 0.0],), ([4.0, -1.0],), ([6.0, 0.0],),
+]
+TIE_INIT = [(2, [4.0, 0.0]), (1, [0.0, 0.0]), (3, [1000.0, 1000.0])]
+
+
+def test_fit_matches_one_step_iterations(spark):
+    """kmeans_fit(tol=0) equals the same number of expression-form
+    one_step iterations: lowest cid wins the tie, the empty cluster
+    keeps its centroid, and the SSE equals sse() at the final
+    centroids."""
+    df = spark.createDataFrame(TIE_ROWS, "features array<double>")
+    res = kmeans_fit(df, 3, initial_centroids=TIE_INIT, max_iter=3, tol=0.0)
+    cents = sorted(TIE_INIT)
+    for _ in range(res.iterations):
+        got = {r["cid"]: list(r["centroid"]) for r in one_step(df, cents).collect()}
+        cents = [(cid, got.get(cid, vec)) for cid, vec in cents]
+    assert [c for c, _ in res.centroids] == [1, 2, 3]
+    for (_, got), (_, want) in zip(res.centroids, cents):
+        assert got == pytest.approx(want, abs=1e-9)
+    assert dict(res.centroids)[3] == [1000.0, 1000.0]
+    assert res.cluster_sizes == {1: 4, 2: 4, 3: 0}
+    assert res.sse == pytest.approx(sse(df, res.centroids).first()["sse"], rel=1e-9)
+
+
+def test_fit_runs_one_spark_job_per_iteration(spark):
+    """Each Lloyd iteration is one narrow mapInPandas job plus its
+    collect: two more iterations cost exactly two more jobs."""
+    df = spark.createDataFrame(TIE_ROWS, "features array<double>")
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(max_iter):
+        # max job id delta, not len(): see test_kmeans_pp's job counter
+        before = max(tracker.getJobIdsForGroup(None) or [0])
+        # tol=-1 never converges, so every fit runs exactly max_iter
+        res = kmeans_fit(df, 3, initial_centroids=TIE_INIT, max_iter=max_iter, tol=-1.0)
+        assert res.iterations == max_iter
+        return max(tracker.getJobIdsForGroup(None) or [0]) - before
+
+    jobs(2)  # warm-up: the first mapInPandas in a session may add jobs
+    assert jobs(4) - jobs(2) == 2
+
+
+def test_k_below_one_rejected(spark):
+    from k_means_using_mapreduce_spark.operators import kmeans_fit_minibatch
+
+    df = spark.createDataFrame(TIE_ROWS, "features array<double>")
+    for bad_k in (0, -1):
+        with pytest.raises(ValueError, match="k must be positive"):
+            validate_kmeans_input(df, bad_k)
+        with pytest.raises(ValueError, match="k must be positive"):
+            kmeans_fit(df, bad_k)
+        with pytest.raises(ValueError, match="k must be positive"):
+            kmeans_fit_minibatch(df, bad_k)
+
+
+def test_minibatch_rejects_batch_fraction_outside_unit_interval(spark):
+    from k_means_using_mapreduce_spark.operators import kmeans_fit_minibatch
+
+    df = spark.createDataFrame(TIE_ROWS, "features array<double>")
+    for bad in (0, 0.0, -0.5, 1.5):
+        with pytest.raises(ValueError, match="batch_fraction"):
+            kmeans_fit_minibatch(df, 2, batch_fraction=bad)
+    assert kmeans_fit_minibatch(df, 2, batch_fraction=1.0, max_iter=2).iterations >= 1
+
+
+def test_minibatch_rejects_centroid_dimension_mismatch(spark):
+    """3-D initial centroids on 2-D data must raise, not drop every row
+    and return an empty fit."""
+    from k_means_using_mapreduce_spark.operators import kmeans_fit_minibatch
+
+    df = spark.createDataFrame(TIE_ROWS, "features array<double>")
+    with pytest.raises(ValueError, match="dimension mismatch"):
+        kmeans_fit_minibatch(
+            df, 2, initial_centroids=[(1, [0.0, 0.0, 0.0]), (2, [5.0, 0.0, 0.0])]
+        )
+
+
 def test_gmm1d_separates_two_gaussians(spark):
     from k_means_using_mapreduce_spark.operators.kmeans import gmm1d_fit
 

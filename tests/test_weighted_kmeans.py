@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from k_means_using_mapreduce_spark.operators.kmeans import kmeans_fit
+from k_means_using_mapreduce_spark.operators.kmeans import kmeans_fit, sse
 
 INIT = [(1, [0.0, 0.0]), (2, [10.0, 10.0])]
 
@@ -66,34 +66,35 @@ def test_unweighted_unchanged(spark):
     assert res.cluster_sizes == {1: 2, 2: 1}
 
 
-def test_engines_agree_on_weighted_sse(spark):
-    """Fused and exact engines must report the SAME sse for the same
-    weighted fit (ADVICE r2: fused was w-weighted, exact was not)."""
+def test_weighted_fit_matches_hand_computed_means_and_sse(spark):
+    """Weighted centroids and the reported SSE against hand-computed
+    values, and the SSE against the expression-form ``sse`` with the
+    same weights (ADVICE r2: the fit's SSE must be w-weighted)."""
     df = spark.createDataFrame(
         [([1.0, 0.0], 2.0), ([4.0, 0.0], 3.0), ([10.0, 10.0], 1.5),
          ([11.0, 9.0], 0.5)],
         "features array<double>, w double",
     )
-    fused = kmeans_fit(df, 2, initial_centroids=INIT, max_iter=5,
-                       weight_col="w", engine="fused")
-    exact = kmeans_fit(df, 2, initial_centroids=INIT, max_iter=5,
-                       weight_col="w", engine="exact")
-    assert fused.sse == pytest.approx(exact.sse, rel=1e-9)
-    for (c1, v1), (c2, v2) in zip(fused.centroids, exact.centroids):
-        assert c1 == c2 and v1 == pytest.approx(v2, abs=1e-9)
+    res = kmeans_fit(df, 2, initial_centroids=INIT, max_iter=5, weight_col="w")
+    by_id = dict(res.centroids)
+    # cluster 1: x = (1*2 + 4*3)/5; cluster 2: (10*1.5 + 11*0.5)/2, (10*1.5 + 9*0.5)/2
+    assert by_id[1] == pytest.approx([2.8, 0.0], abs=1e-9)
+    assert by_id[2] == pytest.approx([10.25, 9.75], abs=1e-9)
+    assert res.cluster_sizes == {1: 5, 2: 2}
+    # 2*1.8² + 3*1.2² + 1.5*(0.25² + 0.25²) + 0.5*(0.75² + 0.75²)
+    assert res.sse == pytest.approx(11.55, rel=1e-9)
+    expected = sse(df, res.centroids, weight_col="w").first()["sse"]
+    assert res.sse == pytest.approx(expected, rel=1e-9)
 
 
-def test_engines_agree_on_ragged_rows(spark):
-    """Rows whose feature length differs from the centroid dim are
-    dropped by BOTH engines (previously only the fused kernel)."""
+def test_ragged_rows_dropped(spark):
+    """Rows whose feature length differs from the centroid dimension
+    are dropped: they count toward no centroid, size or SSE."""
     df = spark.createDataFrame(
         [([1.0, 0.0],), ([3.0, 0.0],), ([2.0, 0.0, 9.0],)],
         "features array<double>",
     )
-    init = [(1, [0.0, 0.0])]
-    fused = kmeans_fit(df, 1, initial_centroids=init, max_iter=3, engine="fused")
-    exact = kmeans_fit(df, 1, initial_centroids=init, max_iter=3, engine="exact")
-    assert dict(fused.centroids)[1] == pytest.approx([2.0, 0.0])
-    assert dict(exact.centroids)[1] == pytest.approx([2.0, 0.0])
-    assert fused.sse == pytest.approx(exact.sse, rel=1e-9)
-    assert fused.cluster_sizes == exact.cluster_sizes == {1: 2}
+    res = kmeans_fit(df, 1, initial_centroids=[(1, [0.0, 0.0])], max_iter=3)
+    assert dict(res.centroids)[1] == pytest.approx([2.0, 0.0], abs=1e-9)
+    assert res.cluster_sizes == {1: 2}
+    assert res.sse == pytest.approx(2.0, rel=1e-9)
